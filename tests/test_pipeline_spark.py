@@ -90,21 +90,25 @@ def test_resume_from_checkpoint(spark, warehouse, tmp_path):
         os.path.join(warehouse, "stage_kernel", "_SUCCESS")) == stage_mtime
 
 
-def test_arrow_and_pandas_fused_stages_identical(spark):
-    """The mapInArrow default and the mapInPandas twin are row-exact
-    equal (modulo the nondeterministic part_id/kernel_ms columns)."""
+def test_staged_and_fused_kernel_stages_identical(spark):
+    """The shipped staged path (extract_stage -> kernel_stage, as
+    run_pipeline runs it) and the fused stage that streaming and bench.py
+    run are row-exact equal (modulo the nondeterministic part_id/kernel_ms
+    columns)."""
     from xrenner_spark.lex import load_lex
-    from xrenner_spark.pipeline import (fused_extract_kernel_stage_arrow,
-                                        fused_extract_kernel_stage_pandas,
-                                        generate_pages, salt_by_url)
+    from xrenner_spark.pipeline import (extract_stage,
+                                        fused_extract_kernel_stage,
+                                        generate_pages, kernel_stage,
+                                        salt_by_url)
     bcast = spark.sparkContext.broadcast(load_lex())
     pages = salt_by_url(generate_pages(spark, 200, partitions=4), 4).persist()
     pages.count()
-    a = fused_extract_kernel_stage_arrow(pages, bcast).drop("part_id", "kernel_ms")
-    b = fused_extract_kernel_stage_pandas(pages, bcast).drop("part_id", "kernel_ms")
-    assert a.schema == b.schema
-    assert a.exceptAll(b).count() == 0
-    assert b.exceptAll(a).count() == 0
+    staged = kernel_stage(extract_stage(pages), bcast).drop("part_id", "kernel_ms")
+    fused = fused_extract_kernel_stage(pages, bcast).drop("part_id", "kernel_ms")
+    assert staged.schema == fused.schema
+    assert staged.filter("row_type = 'm'").count() > 0
+    assert staged.exceptAll(fused).count() == 0
+    assert fused.exceptAll(staged).count() == 0
     pages.unpersist()
 
 

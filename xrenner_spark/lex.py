@@ -104,14 +104,6 @@ class Filters(dict):
 EntityEntry = Tuple[str, str, int]
 
 
-def split_subclass(subclass_raw: str) -> Tuple[str, str]:
-    """'city/inanim' -> ('city', 'inanim'); 'city' -> ('city', '')."""
-    if "/" in subclass_raw:
-        sub, agree = subclass_raw.split("/", 1)
-        return sub, agree
-    return subclass_raw, ""
-
-
 def _type_config_value(raw: str):
     """Apply the model config typing contract: /regex/, bool, int, float,
     else plain string (reference xrenner_lex.py:392-402)."""

@@ -4,7 +4,7 @@ The reference is strictly batch (SURVEY.md §2.7: no streaming operators
 exist in it), so streaming is an additive capability here: a continuous
 ingestion mode for the identical per-document kernel.
 
-Design: the fused extract+kernel stage is a stateless mapInPandas and is
+Design: the fused extract+kernel stage is a stateless mapInArrow and is
 therefore directly streamable; the chain/triple SQL stage self-joins the
 kernel output three ways, which stream-stream join semantics cannot
 express per-document-exactly — and chains never cross documents — so the
@@ -38,8 +38,8 @@ def read_pages_stream(spark: SparkSession, source_dir: str,
 def stream_pipeline(spark: SparkSession, source_dir: str, out_dir: str,
                     lex_dir: Optional[str] = None, available_now: bool = True):
     """Continuous KG construction: pages stream -> kernel -> per-batch
-    triple emission with exactly-once file-sink semantics via the
-    streaming checkpoint.  Returns the started StreamingQuery."""
+    triple emission; returns the started StreamingQuery.  At-least-once:
+    ``foreachBatch`` appends, so a replayed micro-batch appends again."""
     pages = read_pages_stream(spark, source_dir)
     bcast = spark.sparkContext.broadcast(load_lex(lex_dir))
     kernel_out = fused_extract_kernel_stage(pages, bcast)
