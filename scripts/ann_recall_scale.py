@@ -25,7 +25,6 @@ import time
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
-CORES = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 DIM = 64
 TOP_K = 3
 
@@ -52,7 +51,7 @@ def synth_embeddings(spark, out_dir, n_vecs, planted=False):
                           % (DIM - 1, comp)).alias("embedding"),
                    F.pmod(F.hash("vec_id"), F.lit(16)).cast("int")
                    .alias("label"))
-           .repartition(max(CORES, 8)))
+           .repartition(max(spark.sparkContext.defaultParallelism, 8)))
     emb.write.mode("overwrite").parquet(out_dir + "/embeddings.parquet")
 
 
@@ -133,8 +132,7 @@ def main():
     n_vecs = int(sys.argv[1]) if len(sys.argv) > 1 else 1_000_000
     n_sample = int(sys.argv[2]) if len(sys.argv) > 2 else 200
 
-    spark = get_spark("ann-recall", cores=CORES,
-                      shuffle_partitions=max(32, CORES))
+    spark = get_spark("ann-recall")
     spark.sparkContext.setLogLevel("ERROR")
     out_dir = tempfile.mkdtemp(prefix="xann_recall_")
     synth_embeddings(spark, out_dir, n_vecs)

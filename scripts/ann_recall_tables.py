@@ -19,8 +19,6 @@ import time
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
-CORES = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-
 
 def main():
     from pyspark.sql import functions as F
@@ -31,8 +29,7 @@ def main():
     n_vecs = int(sys.argv[1]) if len(sys.argv) > 1 else 1_000_000
     table_counts = [int(a) for a in sys.argv[2:]] or [12, 24]
 
-    spark = get_spark("ann-tables", cores=CORES,
-                      shuffle_partitions=max(32, CORES))
+    spark = get_spark("ann-tables")
     spark.sparkContext.setLogLevel("ERROR")
     out_dir = tempfile.mkdtemp(prefix="xann_tables_")
     synth_embeddings(spark, out_dir, n_vecs, planted=True)

@@ -7,17 +7,17 @@ Per-stage split: the kernel stage is timed through its checkpoint write
 (parquet), then the triples SQL is timed over the checkpoint read —
 the same two-phase shape bench.py's kg_pipeline times as one wall.
 
-Runs an md5-burn canary before each rep (CLAUDE.md: treat any slow
-number as suspect until the canary confirms the box is quiet).
+Runs perfbench's md5-burn canary before each rep (treat any slow number
+as suspect until the canary confirms the box is quiet) and reports the
+best and the median rep.
 
 Usage: python scripts/bench_1m.py [n_docs] [reps]
 """
 
-import hashlib
 import json
-import multiprocessing
 import os
 import shutil
+import statistics
 import sys
 import tempfile
 import time
@@ -25,25 +25,7 @@ import time
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
-CORES = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-
-
-def _burn(n):
-    x = b"x"
-    for _ in range(n):
-        x = hashlib.md5(x).digest()
-
-
-def canary(procs: int = 32, n: int = 2_000_000) -> float:
-    """Wall seconds for a fixed parallel md5 burn — quiet box ≈ 1.7 s."""
-    t0 = time.perf_counter()
-    ps = [multiprocessing.Process(target=_burn, args=(n,))
-          for _ in range(procs)]
-    for p in ps:
-        p.start()
-    for p in ps:
-        p.join()
-    return round(time.perf_counter() - t0, 2)
+from perfbench.harness import canary  # noqa: E402
 
 
 def main():
@@ -56,13 +38,14 @@ def main():
     n_docs = int(sys.argv[1]) if len(sys.argv) > 1 else 1_000_000
     n_reps = int(sys.argv[2]) if len(sys.argv) > 2 else 2
 
-    spark = get_spark("bench-1m", cores=CORES, shuffle_partitions=max(32, CORES))
+    spark = get_spark("bench-1m")
     spark.sparkContext.setLogLevel("ERROR")
-    partitions = max(CORES, 8) * 4  # ~8k docs/task at 1M
+    cores = spark.sparkContext.defaultParallelism
+    partitions = max(cores, 8) * 4  # ~8k docs/task at 1M on 32 cores
 
     reps = []
     for rep in range(n_reps):
-        c = canary()
+        c = round(canary(), 2)
         wh = tempfile.mkdtemp(prefix="xkg_1m_")
         t0 = time.perf_counter()
         pages = generate_pages(spark, n_docs, partitions=partitions)
@@ -96,8 +79,11 @@ def main():
             # never enter the record
             raise SystemExit("rep produced 0 triples — run is invalid")
     best = min(reps, key=lambda r: r["wall_s"])
-    print(json.dumps({"n_docs": n_docs, "cores": CORES,
+    median_wall = statistics.median(r["wall_s"] for r in reps)
+    print(json.dumps({"n_docs": n_docs, "cores": cores,
                       "partitions": partitions, "best": best,
+                      "median_wall_s": median_wall,
+                      "median_docs_per_sec": round(n_docs / median_wall, 1),
                       "reps": reps}))
 
 

@@ -29,9 +29,7 @@ import time
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
-from scripts.bench_1m import canary  # noqa: E402
-
-CORES = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+from perfbench.harness import canary  # noqa: E402
 
 
 def n_exchanges(df):
@@ -43,24 +41,24 @@ def main():
     from pyspark.sql import functions as F
     from xrenner_spark.session import get_spark
 
-    n = int(sys.argv[1]) if len(sys.argv) > 1 else 5_000_000
-    buckets = int(sys.argv[2]) if len(sys.argv) > 2 else CORES
-    reps = int(sys.argv[3]) if len(sys.argv) > 3 else 2
-
     wh = tempfile.mkdtemp(prefix="xbucket_wh_")
-    spark = get_spark("bucketed-join-bench", cores=CORES,
-                      shuffle_partitions=CORES,
+    spark = get_spark("bucketed-join-bench",
                       extra_conf={"spark.sql.warehouse.dir": wh,
                                   # isolate the bucketing effect: no AQE
                                   # runtime join demotion either way
                                   "spark.sql.autoBroadcastJoinThreshold": "-1"})
     spark.sparkContext.setLogLevel("ERROR")
+    cores = spark.sparkContext.defaultParallelism
+
+    n = int(sys.argv[1]) if len(sys.argv) > 1 else 5_000_000
+    buckets = int(sys.argv[2]) if len(sys.argv) > 2 else cores
+    reps = int(sys.argv[3]) if len(sys.argv) > 3 else 2
 
     # two doc-keyed "stage outputs": per-doc metadata + per-doc metrics
-    docs = (spark.range(0, n, 1, CORES).withColumnRenamed("id", "doc_id")
+    docs = (spark.range(0, n, 1, cores).withColumnRenamed("id", "doc_id")
             .withColumn("n_tokens", F.expr("CAST(xxhash64(doc_id) % 200 AS INT) + 10"))
             .withColumn("url", F.expr("concat('https://example.com/', doc_id)")))
-    metrics = (spark.range(0, n, 1, CORES).withColumnRenamed("id", "doc_id")
+    metrics = (spark.range(0, n, 1, cores).withColumnRenamed("id", "doc_id")
                .withColumn("n_mentions", F.expr("CAST(xxhash64(doc_id + 7) % 40 AS INT) + 1")))
 
     t0 = time.time()

@@ -2,14 +2,15 @@
 """Measure dedup_kernel_inputs on a duplicated corpus: N_DISTINCT
 payloads tiled COPIES times under distinct urls (the shape of a real
 crawl, which is commonly 30-60% exact-duplicate pages).  Interleaved
-plain/dedup reps; per-rep md5 canary for tenancy visibility.
+plain/dedup reps, alternating which side runs first; per-run md5 canary
+(perfbench's) for tenancy visibility; min and median wall per side.
 
 Usage: python scripts/bench_dedup_kernel.py [n_distinct] [copies] [reps]
 """
 
-import hashlib
 import os
 import shutil
+import statistics
 import sys
 import tempfile
 import time
@@ -17,16 +18,7 @@ import time
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
-CORES = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-
-
-def canary(seconds=1.5):
-    t0 = time.time()
-    h, n = b"x", 0
-    while time.time() - t0 < seconds:
-        h = hashlib.md5(h).digest()
-        n += 1
-    return n / 1e6 / (time.time() - t0)
+from perfbench.harness import canary  # noqa: E402
 
 
 def main():
@@ -38,11 +30,11 @@ def main():
     copies = int(sys.argv[2]) if len(sys.argv) > 2 else 4
     reps = int(sys.argv[3]) if len(sys.argv) > 3 else 2
 
-    spark = get_spark("dedup-kernel-bench", cores=CORES,
-                      shuffle_partitions=CORES)
+    spark = get_spark("dedup-kernel-bench")
     spark.sparkContext.setLogLevel("ERROR")
+    cores = spark.sparkContext.defaultParallelism
 
-    pages = generate_pages(spark, n_distinct, partitions=CORES)
+    pages = generate_pages(spark, n_distinct, partitions=cores)
     tiled = None
     for k in range(copies):
         c = pages.withColumn("url", F.concat(F.lit("c%d-" % k),
@@ -53,27 +45,33 @@ def main():
     print("pages: %d (%d distinct x %d copies)"
           % (total, n_distinct, copies), flush=True)
 
-    best = {"plain": None, "dedup": None}
+    walls = {"plain": [], "dedup": []}
+    triples = set()
+    sides = (("plain", False), ("dedup", True))
     for rep in range(reps):
-        for mode, flag in (("plain", False), ("dedup", True)):
+        for mode, flag in sides[::1 if rep % 2 == 0 else -1]:
             wh = tempfile.mkdtemp(prefix="xdk_%s_" % mode)
             c = canary()
             spark._jvm.System.gc()
             t0 = time.time()
-            t = run_pipeline(spark, tiled, wh, partitions=CORES,
+            t = run_pipeline(spark, tiled, wh, partitions=cores,
                              dedup_kernel_inputs=flag)
             n = t.count()
             wall = time.time() - t0
             print("rep%d %s: %.1f s, %d triples, %.0f pages/s "
-                  "(canary %.2f Mhash/s)"
+                  "(canary %.2f s)"
                   % (rep, mode, wall, n, total / wall, c), flush=True)
-            if best[mode] is None or wall < best[mode][0]:
-                best[mode] = (wall, n)
+            walls[mode].append(wall)
+            triples.add(n)
             shutil.rmtree(wh, ignore_errors=True)
-    assert best["plain"][1] == best["dedup"][1], "triple counts differ!"
-    print("best plain %.1f s / best dedup %.1f s -> %.2fx"
-          % (best["plain"][0], best["dedup"][0],
-             best["plain"][0] / best["dedup"][0]))
+    assert len(triples) == 1, "triple counts differ!"
+    for mode in walls:
+        print("%s: min %.1f s, median %.1f s"
+              % (mode, min(walls[mode]), statistics.median(walls[mode])))
+    print("plain/dedup: min %.2fx, median %.2fx"
+          % (min(walls["plain"]) / min(walls["dedup"]),
+             statistics.median(walls["plain"])
+             / statistics.median(walls["dedup"])))
 
 
 if __name__ == "__main__":

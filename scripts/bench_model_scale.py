@@ -9,7 +9,7 @@ broadcast payload size, docs/s and mention counts for each.
 Run in a quiet window (md5 canary per CLAUDE.md); fresh Spark session
 per model so JVM/GC state cannot couple the two measurements.
 
-Usage: python scripts/bench_model_scale.py [n_docs] [cores]
+Usage: python scripts/bench_model_scale.py [n_docs] [reps]
 """
 
 import json
@@ -22,7 +22,7 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
 
-def measure(model_dir, n_docs, cores):
+def measure(model_dir, n_docs):
     from xrenner_spark.lex import load_lex
     from xrenner_spark.pipeline import (fused_extract_kernel_stage,
                                         generate_pages, salt_by_url)
@@ -33,8 +33,9 @@ def measure(model_dir, n_docs, cores):
     build_s = time.time() - t0
     payload = len(pickle.dumps(lex))
 
-    spark = get_spark("model-scale", cores=cores, shuffle_partitions=cores)
+    spark = get_spark("model-scale")
     spark.sparkContext.setLogLevel("ERROR")
+    cores = spark.sparkContext.defaultParallelism
     bcast = spark.sparkContext.broadcast(lex)
     pages = salt_by_url(generate_pages(spark, n_docs, partitions=cores), cores)
     t0 = time.time()
@@ -52,12 +53,11 @@ def main():
     # one model per process: a shared JVM would hand the second config a
     # JIT-warmed runtime (measured: +46% docs/s for whichever runs second)
     if len(sys.argv) > 1 and sys.argv[1] == "--one":
-        print(json.dumps(measure(sys.argv[2], int(sys.argv[3]), int(sys.argv[4]))))
+        print(json.dumps(measure(sys.argv[2], int(sys.argv[3]))))
         return
     import subprocess
     n_docs = int(sys.argv[1]) if len(sys.argv) > 1 else 20000
-    cores = int(sys.argv[2]) if len(sys.argv) > 2 else 32
-    reps = int(sys.argv[3]) if len(sys.argv) > 3 else 2
+    reps = int(sys.argv[2]) if len(sys.argv) > 2 else 2
     large_dir = os.path.join(REPO, ".large_model")
     if not os.path.isdir(large_dir):
         raise SystemExit("run scripts/make_large_model.py first")
@@ -66,7 +66,7 @@ def main():
         for model in (toy_dir, large_dir):   # interleaved A/B
             out = subprocess.run(
                 [sys.executable, os.path.abspath(__file__), "--one", model,
-                 str(n_docs), str(cores)],
+                 str(n_docs)],
                 capture_output=True, text=True, timeout=1200)
             line = [ln for ln in out.stdout.strip().split("\n")
                     if ln.startswith("{")][-1]

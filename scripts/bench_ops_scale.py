@@ -18,7 +18,7 @@ temporary sf_dir and runs the unmodified operator queries against it:
   dedup_exact         (md5 groupBy)
   dedup_simhash_pairs (pigeonhole banding + popcount verify)
 
-Reports wall seconds + output rows per operator plus a 32-proc md5
+Reports wall seconds + output rows per operator plus perfbench's md5
 canary before each. Usage: python scripts/bench_ops_scale.py [n_vecs]
 [doc_mult] [reps]
 """
@@ -33,9 +33,8 @@ import time
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
-from scripts.bench_1m import canary  # noqa: E402
+from perfbench.harness import canary  # noqa: E402
 
-CORES = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
@@ -55,7 +54,7 @@ def synthesize(spark, out_dir, n_vecs, doc_mult):
               .select((F.col("doc_id") * doc_mult + F.col("copy"))
                       .alias("doc_id"),
                       "text", "lang", "source", "n_chars")
-              .repartition(max(CORES, 8)))
+              .repartition(max(spark.sparkContext.defaultParallelism, 8)))
     scaled.write.mode("overwrite").parquet(out_dir + "/documents.parquet")
 
 
@@ -67,8 +66,7 @@ def main():
     doc_mult = int(sys.argv[2]) if len(sys.argv) > 2 else 100  # 500k docs
     reps = int(sys.argv[3]) if len(sys.argv) > 3 else 2
 
-    spark = get_spark("ops-scale", cores=CORES,
-                      shuffle_partitions=max(32, CORES))
+    spark = get_spark("ops-scale")
     spark.sparkContext.setLogLevel("ERROR")
     out_dir = tempfile.mkdtemp(prefix="xops_scale_")
     t0 = time.perf_counter()
@@ -115,7 +113,7 @@ def main():
         for _ in range(reps):
             spark.catalog.clearCache()
             spark._jvm.System.gc()
-            c = canary()
+            c = round(canary(), 2)
             t0 = time.perf_counter()
             df = fn(spark, out_dir)
             df.write.mode("overwrite").format("noop").save()
@@ -126,7 +124,8 @@ def main():
                          "canary_s": c, "rows": rows}
         print(json.dumps({name: results[name]}))
     print(json.dumps({"n_vecs": n_vecs, "n_docs_mult": doc_mult,
-                      "synth_s": t_synth, "cores": CORES,
+                      "synth_s": t_synth,
+                      "cores": spark.sparkContext.defaultParallelism,
                       "results": results}))
     shutil.rmtree(out_dir, ignore_errors=True)
 

@@ -22,9 +22,8 @@ import time
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
-from scripts.bench_1m import canary  # noqa: E402
+from perfbench.harness import canary  # noqa: E402
 
-CORES = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
@@ -41,7 +40,7 @@ def synth_pages(spark, src_dir, doc_mult):
                                     + F.pmod(F.col("doc_id"), F.lit(60))))
                  .alias("warc_ts"),
                  "text", "lang")
-             .repartition(max(CORES, 8)))
+             .repartition(max(spark.sparkContext.defaultParallelism, 8)))
     pages.write.mode("overwrite").parquet(src_dir)
     # metadata-driven count over the written files (re-counting the
     # unexecuted crossJoin plan would re-run the whole synthesis)
@@ -56,9 +55,9 @@ def main():
     doc_mult = int(sys.argv[1]) if len(sys.argv) > 1 else 100
     fpt = int(sys.argv[2]) if len(sys.argv) > 2 else 4
 
-    spark = get_spark("stream-scale", cores=CORES,
-                      shuffle_partitions=max(32, CORES))
+    spark = get_spark("stream-scale")
     spark.sparkContext.setLogLevel("ERROR")
+    cores = spark.sparkContext.defaultParallelism
     base = tempfile.mkdtemp(prefix="xstream_scale_")
     src = base + "/src"
     n_pages = synth_pages(spark, src, doc_mult)
@@ -66,11 +65,11 @@ def main():
     n_distinct = (spark.read.parquet(src)
                   .select(F.md5("text")).distinct().count())
     report = {"n_pages": n_pages, "n_distinct_texts": n_distinct,
-              "files_per_trigger": fpt, "cores": CORES}
+              "files_per_trigger": fpt, "cores": cores}
 
     def run(name, build):
         out, ckpt = base + "/out_" + name, base + "/ckpt_" + name
-        c = canary()
+        c = round(canary(), 2)
         t0 = time.perf_counter()
         pages = (spark.readStream.schema(schema)
                  .option("maxFilesPerTrigger", fpt).parquet(src))
@@ -114,7 +113,7 @@ def main():
                    F.lit("https://"), host, F.lit(":443"), page,
                    F.lit("?gclid=1"))))
     (pages0.withColumn("url", spelled)
-     .repartition(max(CORES, 8)).write.mode("overwrite").parquet(fsrc))
+     .repartition(max(cores, 8)).write.mode("overwrite").parquet(fsrc))
     src_saved = src
     src = fsrc
     got = run("url_frontier", streaming_url_frontier)

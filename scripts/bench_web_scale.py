@@ -21,9 +21,7 @@ import time
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
-from scripts.bench_1m import canary  # noqa: E402
-
-CORES = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+from perfbench.harness import canary  # noqa: E402
 
 
 def pages_from_range(spark, n, partitions):
@@ -58,15 +56,15 @@ def main():
     hot_mult = int(sys.argv[2]) if len(sys.argv) > 2 else 1_000_000
     reps = int(sys.argv[3]) if len(sys.argv) > 3 else 2
 
-    spark = get_spark("web-scale-bench", cores=CORES,
-                      shuffle_partitions=CORES)
+    spark = get_spark("web-scale-bench")
     spark.sparkContext.setLogLevel("ERROR")
+    cores = spark.sparkContext.defaultParallelism
 
     for rep in range(reps):
         c = canary()
         spark._jvm.System.gc()
         t0 = time.time()
-        out = dedup(pages_from_range(spark, n, CORES))
+        out = dedup(pages_from_range(spark, n, cores))
         rows = out.count()
         wall = time.time() - t0
         print("rep%d uniform: %d captures -> %d canonical pages in %.1f s"
@@ -79,7 +77,7 @@ def main():
         c = canary()
         spark._jvm.System.gc()
         t0 = time.time()
-        hot = (pages_from_range(spark, hot_mult, CORES)
+        hot = (pages_from_range(spark, hot_mult, cores)
                .withColumn("doc_id", F.col("doc_id") * 4 + n)
                # recompute warc_ts from the REWRITTEN doc_id so hot
                # captures carry unique timestamps (the projection built
@@ -90,7 +88,7 @@ def main():
                .withColumn("url", F.expr(
                    "'https://WWW.Example.com:443/site/0/"
                    "?b=2&a=1&utm_source=feed#frag'")))
-        out = dedup(pages_from_range(spark, n, CORES).unionByName(hot))
+        out = dedup(pages_from_range(spark, n, cores).unionByName(hot))
         rows = out.count()
         wall = time.time() - t0
         # verification collect OUTSIDE the timed window (the earlier

@@ -53,8 +53,17 @@ def test_serializations_match_reference(golden_path, lex):
     ref_parse = parse.replace("\r", "")
     if lex.depedit is not None:
         ref_parse = lex.depedit.run(ref_parse)
-    mine = output_testcase(result, ref_parse, model=lex.model_dir)
+    # the golden's model: line records the absolute model path of the
+    # checkout it was captured in; compare every other byte, and the
+    # model path only from xrenner_spark/models/<name> down
+    recorded = next(line[len("model:"):] for line
+                    in golden["formats"]["unittest"].split("\n")
+                    if line.startswith("model:"))
+    mine = output_testcase(result, ref_parse, model=recorded)
     assert mine == golden["formats"]["unittest"]
+    tail = recorded.split("/")[-3:]
+    assert tail[:2] == ["xrenner_spark", "models"]
+    assert lex.model_dir.split(os.sep)[-3:] == tail
 
     # round-3 sinks: viz HTML, WebAnno XMI + TSV, PAULA standoff
     if "html" in golden["formats"]:

@@ -70,6 +70,21 @@ def test_spark_submit_local_cluster(tmp_path):
     assert clustered and clustered == local
 
 
+def test_run_kg_rejects_iceberg_catalog(tmp_path):
+    """run_pipeline always writes a parquet catalog, so a request for
+    Iceberg must fail loudly at argument parsing, before any JVM starts
+    or the warehouse is touched."""
+    warehouse = tmp_path / "wh"
+    proc = subprocess.run(
+        [sys.executable, os.path.join(REPO, "jobs", "run_kg.py"),
+         "--warehouse", str(warehouse), "--synthesize", "1",
+         "--iceberg-catalog", "x"],
+        capture_output=True, text=True, timeout=300)
+    assert proc.returncode == 2, proc.stderr[-2000:]
+    assert "unrecognized arguments: --iceberg-catalog x" in proc.stderr
+    assert not warehouse.exists()
+
+
 def test_spark_submit_py_files(tmp_path):
     zpath = str(tmp_path / "xkg.zip")
     _build_zip(zpath)

@@ -1,9 +1,11 @@
 """SparkSession construction with scale-appropriate defaults.
 
-Local sandbox runs use ``local[$SPARK_GRAFT_CPUS]``; on a real cluster the
-same settings ship through spark-submit --conf.  Documents are fat rows
-(html + embedded parse), so Arrow batches are kept small
-(maxRecordsPerBatch) to bound executor memory per batch.
+Local runs size themselves from the host: ``local[<cpus>]`` over the CPUs
+this process may run on, and a driver heap of a quarter of host RAM;
+``SPARK_GRAFT_CPUS`` and ``SPARK_GRAFT_DRIVER_MEM`` override either.  On a
+real cluster the same settings ship through spark-submit --conf.
+Documents are fat rows (html + embedded parse), so Arrow batches are kept
+small (maxRecordsPerBatch) to bound executor memory per batch.
 """
 
 from __future__ import annotations
@@ -16,9 +18,20 @@ from pyspark.sql import SparkSession
 def get_spark(app_name: str = "xrenner-spark", cores: int = None,
               shuffle_partitions: int = None, extra_conf: dict = None) -> SparkSession:
     if cores is None:
-        cores = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+        cores = int(os.environ.get("SPARK_GRAFT_CPUS",
+                                   len(os.sched_getaffinity(0))))
     if shuffle_partitions is None:
         shuffle_partitions = max(32, cores)
+    driver_mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+    if driver_mem is None:
+        # the one local JVM carries every task slot, on a host it shares:
+        # a quarter of host RAM, at least 2g.  The 48g cap is the heap
+        # measured to hold 32 concurrent tasks buffering Arrow batches +
+        # nested parquet writes (the same 20k-doc pipeline ran 19.0s at
+        # 16g vs 8.4s at 48g, all GC).  On a real cluster this is
+        # per-executor memory sizing.
+        ram = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE")
+        driver_mem = "%dg" % max(2, min(48, ram // 4 // 2**30))
     builder = (
         SparkSession.builder
         .appName(app_name)
@@ -37,12 +50,7 @@ def get_spark(app_name: str = "xrenner-spark", cores: int = None,
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "256")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        # 32 concurrent tasks buffering Arrow batches + nested parquet
-        # writes thrash a 16g heap (measured: the same 20k-doc pipeline
-        # runs 19.0s at 16g vs 8.4s at 48g, all GC) — on a real cluster
-        # this is per-executor memory sizing, here the one local JVM
-        # carries all 32 task slots
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory", driver_mem)
         .config("spark.ui.enabled", "false")
     )
     for key, val in (extra_conf or {}).items():
