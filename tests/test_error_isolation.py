@@ -81,3 +81,23 @@ def test_serialize_stage_isolates_bad_docs(spark):
     good_urls = {r["url"] for i, r in enumerate(rows) if i != 2}
     assert dumped and {r.url for r in dumped} <= good_urls
     assert all(r.line for r in dumped)
+
+
+def test_tokens_stage_isolates_bad_pages(spark):
+    """A page without the conllu markers contributes no token rows; the
+    other pages' tokens are the ones they give on their own."""
+    import pandas as pd
+    from xrenner_spark.corpus import build_page
+    from xrenner_spark.pipeline import tokens_stage
+
+    rows = [build_page(i) for i in range(6)]
+    rows[2]["html"] = b"<html>no article here</html>"   # no markers
+
+    def tokens(page_rows):
+        pdf = pd.DataFrame(page_rows, columns=["url", "warc_ts", "html", "text", "lang"])
+        pages = spark.createDataFrame(pdf, schema=PAGES_SCHEMA)
+        return sorted(map(tuple, tokens_stage(pages).collect()))
+
+    got = tokens(rows)
+    assert {r[0] for r in got} == {r["url"] for i, r in enumerate(rows) if i != 2}
+    assert got == tokens(rows[:2] + rows[3:])

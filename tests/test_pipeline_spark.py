@@ -4,6 +4,7 @@ every row, and a killed/rerun job must resume from checkpoints."""
 
 import os
 import shutil
+from collections import Counter
 
 import pytest
 
@@ -22,6 +23,9 @@ def warehouse(spark, tmp_path_factory):
     wh = str(tmp_path_factory.mktemp("wh"))
     pages = generate_pages(spark, N_DOCS, partitions=4)
     run_pipeline(spark, pages, wh, partitions=4)
+    # a pristine copy of the cold run: the kill-point cases resume from
+    # parts of it and compare against it
+    shutil.copytree(wh, wh + "_cold")
     return wh
 
 
@@ -88,6 +92,39 @@ def test_resume_from_checkpoint(spark, warehouse, tmp_path):
     assert after == before
     assert os.path.getmtime(
         os.path.join(warehouse, "stage_kernel", "_SUCCESS")) == stage_mtime
+
+
+#: run_pipeline's writes in commit order
+WRITES = ("stage_extract", "_lineage_extract", "stage_kernel",
+          "_lineage_kernel", "chains", "triples")
+#: warehouse states to resume from: everything up to one write, and
+#: triples present with chains missing
+CRASHES = {"after_" + w: WRITES[:i + 1] for i, w in enumerate(WRITES)}
+CRASHES["triples_without_chains"] = tuple(w for w in WRITES if w != "chains")
+
+
+def _table_rows(spark, wh, name):
+    """A table's rows as a multiset, without the placement and timing
+    columns a rerun may change."""
+    df = (spark.read.parquet(os.path.join(wh, name))
+          .drop("part_id", "kernel_ms", "wall_ms"))
+    return Counter(repr(tuple(r)) for r in df.collect())
+
+
+@pytest.mark.parametrize("kept", list(CRASHES.values()), ids=list(CRASHES))
+def test_resume_after_any_write(spark, warehouse, tmp_path, kept):
+    """Kill at every write point: a warehouse holding only the writes
+    made before the crash resumes to every table and lineage sidecar of
+    the cold run."""
+    cold = warehouse + "_cold"
+    wh = str(tmp_path / "wh")
+    os.makedirs(wh)
+    for name in kept:
+        shutil.copytree(os.path.join(cold, name), os.path.join(wh, name))
+    run_pipeline(spark, generate_pages(spark, N_DOCS, partitions=4), wh,
+                 partitions=4)
+    for name in WRITES:
+        assert _table_rows(spark, wh, name) == _table_rows(spark, cold, name), name
 
 
 def test_staged_and_fused_kernel_stages_identical(spark):

@@ -73,31 +73,20 @@ class Catalog:
         path = self._path(name)
         return os.path.isdir(path) and os.path.exists(os.path.join(path, "_SUCCESS"))
 
-    def write(self, df: DataFrame, name: str, mode: str = "overwrite",
-              partition_by=None):
+    def write(self, df: DataFrame, name: str, mode: str = "overwrite"):
         if self.iceberg_catalog:
             writer = df.writeTo(self._ident(name))
-            if partition_by:
-                writer = writer.partitionedBy(*partition_by)
             if mode == "append":
                 writer.append()
             else:
                 writer.createOrReplace()
             return
-        writer = df.write.mode(mode)
-        if partition_by:
-            writer = writer.partitionBy(*partition_by)
-        writer.parquet(self._path(name))
+        df.write.mode(mode).parquet(self._path(name))
 
     def read(self, name: str) -> DataFrame:
         if self.iceberg_catalog:
             return self.spark.read.table(self._ident(name))
         return self.spark.read.parquet(self._path(name))
-
-    def append_lineage(self, stage: str, lineage_df: DataFrame):
-        """Per-partition lineage/metrics rows recorded alongside each stage
-        output (north rule: exact resume + per-partition lineage)."""
-        self.write(lineage_df, "_lineage_" + stage, mode="overwrite")
 
     def lineage(self, stage: str) -> DataFrame:
         return self.read("_lineage_" + stage)

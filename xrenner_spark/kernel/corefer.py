@@ -18,7 +18,6 @@ from .compat import (acronym_match, agree_compatible, best_candidate,
                      group_agree_compatible, isa, merge_entities,
                      modifiers_compatible, propagate_entity, speaker_compatible)
 from .mentions import markables_overlap
-from ..rules import rule_applies
 
 
 def find_antecedent(markable: Markable, doc: DocState, lex,

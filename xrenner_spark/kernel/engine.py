@@ -251,10 +251,6 @@ class DocResult:
             self._tokens = self._tokens()
         return self._tokens
 
-    @tokens.setter
-    def tokens(self, value):
-        self._tokens = value
-
 
 def analyze_document(doc_id: str, conllu_text: str, lex,
                      pre_rewritten: bool = False, seed_state=None,

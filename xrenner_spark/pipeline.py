@@ -17,10 +17,12 @@ Stage graph (SURVEY.md §3.4):
       ▼
     triples table (+ chains table)
 
-Every stage is resumable: if its checkpoint table exists (same run_dir),
-it is read back instead of recomputed, so a killed job restarted with the
-same warehouse continues where it left off and produces byte-identical
-triples (verified in tests/test_pipeline_spark.py).
+Every stage is resumable under one commit rule: a stage is done when its
+last write exists (its ``_lineage_`` sidecar, or the table itself for
+chains and triples); a done stage is read back, and a stage that is not
+done is rebuilt and overwritten.  So a job killed after any write and
+restarted with the same warehouse ends with the same tables as a cold
+run (verified in tests/test_pipeline_spark.py).
 
 All per-row Python lives inside mapInPandas/mapInArrow batch loops
 (Arrow in/out); the rule/gazetteer bundle is broadcast once per executor.
@@ -29,6 +31,7 @@ All per-row Python lives inside mapInPandas/mapInArrow batch loops
 from __future__ import annotations
 
 import hashlib
+import sys
 import time
 from functools import partial
 from typing import Iterator, Optional
@@ -42,7 +45,7 @@ from pyspark.sql import types as T
 from .catalog import Catalog
 from .kernel import analyze_document_windowed
 from .lex import load_lex
-from .triples import parse_verbs
+from .triples import OBJECT_FUNC, SUBJECT_FUNC_DEFAULT, parse_verbs
 
 # ---------------------------------------------------------------------
 # schemas
@@ -89,11 +92,6 @@ MENTION_STRUCT = T.StructType([
     T.StructField("head_parent", T.IntegerType()),
     T.StructField("sent_num", T.IntegerType()),
     T.StructField("coordinate", T.BooleanType()),
-])
-
-VERB_STRUCT = T.StructType([
-    T.StructField("tid", T.IntegerType()),
-    T.StructField("lemma", T.StringType()),
 ])
 
 # The kernel stage emits LONG format: one flat row per document ('d',
@@ -206,7 +204,8 @@ TOKENS_SCHEMA = T.StructType([
 def tokens_stage(extracted_or_pages: DataFrame) -> DataFrame:
     """Long-format token table (url, tid, text, lemma, pos, head, func,
     sent_num) for SQL-side corpus analytics; accepts either the extract
-    stage output (has conllu) or raw pages (has html)."""
+    stage output (has conllu) or raw pages (has html).  A page whose
+    extraction or token-line parse raises contributes no rows."""
     has_conllu = "conllu" in extracted_or_pages.columns
 
     def run(iterator: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -214,25 +213,30 @@ def tokens_stage(extracted_or_pages: DataFrame) -> DataFrame:
         for pdf in iterator:
             rows = []
             for rec in pdf.itertuples(index=False):
-                conllu = rec.conllu if has_conllu else extract_conllu(rec.html)
-                offset = 0
-                in_sentence = 0
-                sent_num = 1
-                for line in conllu.split("\n"):
-                    if "\t" not in line:
-                        if in_sentence:
-                            offset += in_sentence
-                            sent_num += 1
-                            in_sentence = 0
-                        continue
-                    cols = line.split("\t")
-                    if "." in cols[0] or "-" in cols[0]:
-                        continue
-                    in_sentence += 1
-                    head = 0 if cols[6] == "0" else int(cols[6]) + offset
-                    rows.append({"url": rec.url, "tid": int(cols[0]) + offset,
-                                 "text": cols[1], "lemma": cols[2], "pos": cols[3],
-                                 "head": head, "func": cols[7], "sent_num": sent_num})
+                page = []
+                try:
+                    conllu = rec.conllu if has_conllu else extract_conllu(rec.html)
+                    offset = 0
+                    in_sentence = 0
+                    sent_num = 1
+                    for line in conllu.split("\n"):
+                        if "\t" not in line:
+                            if in_sentence:
+                                offset += in_sentence
+                                sent_num += 1
+                                in_sentence = 0
+                            continue
+                        cols = line.split("\t")
+                        if "." in cols[0] or "-" in cols[0]:
+                            continue
+                        in_sentence += 1
+                        head = 0 if cols[6] == "0" else int(cols[6]) + offset
+                        page.append({"url": rec.url, "tid": int(cols[0]) + offset,
+                                     "text": cols[1], "lemma": cols[2], "pos": cols[3],
+                                     "head": head, "func": cols[7], "sent_num": sent_num})
+                except Exception:  # per-doc isolation: skip bad pages
+                    continue
+                rows.extend(page)
             yield pd.DataFrame(rows, columns=[f.name for f in TOKENS_SCHEMA.fields])
 
     return extracted_or_pages.mapInPandas(run, schema=TOKENS_SCHEMA)
@@ -312,19 +316,10 @@ def descendants_closure_sql(tokens: DataFrame, max_depth: int = 12) -> DataFrame
 # stage 2: the per-document kernel
 # ---------------------------------------------------------------------
 
-def _analyze_page(url: str, conllu: str, lex):
-    """The one per-document path: depedit, the windowed kernel, then the
-    verbs.  Returns ``(DocResult, [(tid, lemma), ...])``; raises on a bad
-    document, and each stage decides how a failure shows in its rows."""
-    if lex.depedit is not None:  # rewrite once for both consumers
-        conllu = lex.depedit.run(conllu)
-    result = analyze_document_windowed(url, conllu, lex, pre_rewritten=True)
-    return result, sorted(parse_verbs(conllu).items())
-
-
 def _kernel_arrow(df: DataFrame, lex_broadcast, page_inputs) -> DataFrame:
     """The one KERNEL_SCHEMA emitter: ``mapInArrow`` over ``df`` (url,
-    warc_ts, lang, ...).  ``page_inputs(batch)`` yields ``(load,
+    warc_ts, lang, ...); per page it runs depedit, the windowed kernel,
+    then the verbs.  ``page_inputs(batch)`` yields ``(load,
     failed_sha)`` per page: ``load()`` returns ``(conllu, text_sha256)``
     or raises, and a failed page's 'd' row carries the error and
     ``failed_sha``, with no 'm'/'v' rows.  Columns are Python lists filled
@@ -351,7 +346,11 @@ def _kernel_arrow(df: DataFrame, lex_broadcast, page_inputs) -> DataFrame:
                 t0 = time.perf_counter()
                 try:
                     conllu, sha = load()
-                    result, verbs = _analyze_page(url, conllu, lex)
+                    if lex.depedit is not None:  # rewrite once for both consumers
+                        conllu = lex.depedit.run(conllu)
+                    result = analyze_document_windowed(url, conllu, lex,
+                                                       pre_rewritten=True)
+                    verbs = sorted(parse_verbs(conllu).items())
                     mentions = result.mentions
                     n_sent, n_tok = result.n_sentences, result.n_tokens
                     error = ""
@@ -521,7 +520,8 @@ def serialize_stage(pages: DataFrame, lex_broadcast,
             rows = []
             for rec in pdf.itertuples(index=False):
                 try:
-                    result, _ = _analyze_page(rec.url, extract_conllu(rec.html), lex)
+                    result = analyze_document_windowed(
+                        rec.url, extract_conllu(rec.html), lex)
                 except Exception as exc:  # per-doc isolation: one bad page
                     rows.append((rec.url, "error", "", repr(exc)[:500]))
                     continue
@@ -559,7 +559,8 @@ def training_dump_stage(pages: DataFrame, lex_broadcast) -> DataFrame:
             rows = []
             for rec in pdf.itertuples(index=False):
                 try:
-                    result, _ = _analyze_page(rec.url, extract_conllu(rec.html), lex)
+                    result = analyze_document_windowed(
+                        rec.url, extract_conllu(rec.html), lex)
                 except Exception:  # per-doc isolation: skip bad pages
                     continue
                 rows.extend((rec.url, line) for line in result.dump_rows)
@@ -648,29 +649,28 @@ def docs_view(kernel_out: DataFrame) -> DataFrame:
                     "n_sentences", "n_tokens", "kernel_ms", "error"))
 
 
-def triples_stage(kernel_out: DataFrame, subject_func: str = "^[nc]subj",
-                  object_func: str = "^(obj|dobj|iobj|obl|nmod)$") -> DataFrame:
+def triples_stage(kernel_out: DataFrame) -> DataFrame:
     """(subj, pred, obj) emission: role-tagged verb arguments joined back
     to chain-canonical strings.  All joins are co-keyed on url, so with the
     upstream url-hash partitioning they stay within the same shuffle
     partitioning (AQE coalesces post-shuffle)."""
-    return triples_from_views(mentions_view(kernel_out), verbs_view(kernel_out),
-                              subject_func, object_func)
+    return triples_from_views(mentions_view(kernel_out), verbs_view(kernel_out))
 
 
-def triples_from_views(mentions: DataFrame, verbs: DataFrame,
-                       subject_func: str = "^[nc]subj",
-                       object_func: str = "^(obj|dobj|iobj|obl|nmod)$") -> DataFrame:
+def triples_from_views(mentions: DataFrame, verbs: DataFrame) -> DataFrame:
     """triples_stage over already-exploded mentions/verbs views (the
     driver-oracle entry point — same dataflow, input read back from the
-    exported parquet instead of the live kernel)."""
+    exported parquet instead of the live kernel).  The argument roles are
+    the ones triples.extract_triples uses."""
     canon = chains_from_mentions(mentions).select(
         "url", "group_id", "canonical_text", F.col("entity").alias("chain_entity"))
 
     args = (mentions
             .withColumn("role",
-                        F.when(F.regexp_like("head_func", F.lit(subject_func)), "subj")
-                        .when(F.regexp_like("head_func", F.lit(object_func)), "obj"))
+                        F.when(F.regexp_like("head_func",
+                                             F.lit(SUBJECT_FUNC_DEFAULT.pattern)), "subj")
+                        .when(F.regexp_like("head_func",
+                                            F.lit(OBJECT_FUNC.pattern)), "obj"))
             .filter(F.col("role").isNotNull())
             .join(verbs, (mentions.url == verbs.url)
                   & (mentions.head_parent == verbs.verb_id), "inner")
@@ -710,9 +710,11 @@ def run_pipeline(spark: SparkSession, pages: DataFrame, warehouse: str,
                  dedup_kernel_inputs: bool = False) -> DataFrame:
     """Full run: returns the triples DataFrame (already persisted).
 
-    With ``resume=True``, stages whose checkpoint tables exist in the
-    warehouse are skipped and read back — kill/rerun produces identical
-    output without recomputing finished stages.
+    Six writes, in order: stage_extract, _lineage_extract, stage_kernel,
+    _lineage_kernel, chains, triples.  With ``resume=True`` a stage whose
+    last write exists is read back and any other stage is rebuilt and
+    overwritten, so a job killed after any write resumes to a cold run's
+    tables.
 
     ``dedup_kernel_inputs=True`` computes the kernel once per distinct
     page payload and joins results back to every copy (see
@@ -723,37 +725,34 @@ def run_pipeline(spark: SparkSession, pages: DataFrame, warehouse: str,
     if partitions is None:
         partitions = max(spark.sparkContext.defaultParallelism, 8)
 
-    if resume and cat.exists("stage_extract"):
-        extracted = cat.read("stage_extract")
-    else:
-        extracted = extract_stage(salt_by_url(pages, partitions))
-        cat.write(extracted, "stage_extract")
-        extracted = cat.read("stage_extract")
-        cat.append_lineage("extract", lineage_of(extracted, "extract"))
+    def stage(name, build, lineage=None, on_reuse=""):
+        """The one commit rule: a stage is done when its last write (its
+        ``_lineage_`` sidecar, else the table) exists; else it is rebuilt."""
+        last = "_lineage_" + lineage if lineage else name
+        if resume and cat.exists(last):
+            sys.stderr.write(on_reuse)
+            return cat.read(name)
+        cat.write(build(), name)
+        out = cat.read(name)
+        if lineage:
+            cat.write(lineage_of(out, lineage), last)
+        return out
 
-    if resume and cat.exists("stage_kernel"):
-        if rule_based or no_seq or override:
-            import sys
-            sys.stderr.write(
-                "WARNING: stage_kernel checkpoint exists; rule_based/"
-                "no_seq/override have NO effect on resumed output — "
-                "pass resume=False (run_kg --no-resume) to recompute "
-                "under the requested model mode\n")
-        kernel_out = cat.read("stage_kernel")
-    else:
+    def kernel():
         lex = load_lex(lex_dir, rule_based=rule_based,
                        no_seq=no_seq, override=override)
         bcast = spark.sparkContext.broadcast(lex)
-        kernel_out = (dedup_kernel_stage(extracted, bcast)
-                      if dedup_kernel_inputs
-                      else kernel_stage(extracted, bcast))
-        cat.write(kernel_out, "stage_kernel")
-        kernel_out = cat.read("stage_kernel")
-        cat.append_lineage("kernel", lineage_of(kernel_out, "kernel"))
+        return (dedup_kernel_stage if dedup_kernel_inputs
+                else kernel_stage)(extracted, bcast)
 
-    if resume and cat.exists("triples"):
-        return cat.read("triples")
-    triples = triples_stage(kernel_out)
-    cat.write(triples, "triples")
-    cat.write(chains_stage(kernel_out), "chains")
-    return cat.read("triples")
+    extracted = stage("stage_extract",
+                      lambda: extract_stage(salt_by_url(pages, partitions)),
+                      "extract")
+    kernel_out = stage("stage_kernel", kernel, "kernel", on_reuse=(
+        "WARNING: stage_kernel checkpoint exists; rule_based/"
+        "no_seq/override have NO effect on resumed output — "
+        "pass resume=False (run_kg --no-resume) to recompute "
+        "under the requested model mode\n"
+        if rule_based or no_seq or override else ""))
+    stage("chains", lambda: chains_stage(kernel_out))
+    return stage("triples", lambda: triples_stage(kernel_out))

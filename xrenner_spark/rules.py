@@ -314,14 +314,6 @@ def mark_prop(mark, key: str):
     return getattr(mark, key)
 
 
-def rule_applies(constraints: List[Constraint], mark, lex, doc, anaphor=None) -> bool:
-    """All constraints hold (reference xrenner_coref.py:166-179)."""
-    for constraint in constraints:
-        if not constraint.check(mark, lex, doc, anaphor):
-            return False
-    return True
-
-
 # ----------------------------------------------------------------------
 # whole-rule codegen
 # ----------------------------------------------------------------------
@@ -350,9 +342,10 @@ _PROP_EXPR = {
 
 def compile_constraints(constraints: List[Constraint]):
     """Compile a constraint list into ONE generated function
-    ``fn(mark, lex, doc, anaphor) -> bool`` equivalent to
-    :func:`rule_applies` on the same list — same evaluation order, same
-    short-circuiting, same group-failure side effects.
+    ``fn(mark, lex, doc, anaphor) -> bool`` that holds when every
+    constraint's ``check`` holds (reference xrenner_coref.py:166-179) —
+    same evaluation order, same short-circuiting, same group-failure side
+    effects.
 
     Simple property tests (the overwhelming majority of shipped rules)
     inline to direct attribute comparisons; anything stateful

@@ -38,8 +38,10 @@ def read_pages_stream(spark: SparkSession, source_dir: str,
 def stream_pipeline(spark: SparkSession, source_dir: str, out_dir: str,
                     lex_dir: Optional[str] = None, available_now: bool = True):
     """Continuous KG construction: pages stream -> kernel -> per-batch
-    triple emission; returns the started StreamingQuery.  At-least-once:
-    ``foreachBatch`` appends, so a replayed micro-batch appends again."""
+    triple emission; returns the started StreamingQuery.  Each micro-batch
+    overwrites its own ``triples/batch_id=<id>`` directory, so a replayed
+    batch (``foreachBatch`` is at-least-once) replaces its rows, and
+    readers get ``batch_id`` from the path."""
     pages = read_pages_stream(spark, source_dir)
     bcast = spark.sparkContext.broadcast(load_lex(lex_dir))
     kernel_out = fused_extract_kernel_stage(pages, bcast)
@@ -51,9 +53,8 @@ def stream_pipeline(spark: SparkSession, source_dir: str, out_dir: str,
         batch_df = batch_df.persist()
         try:
             batch_df.count()  # materialize before the 3-way join fan-out
-            (triples_stage(batch_df)
-             .withColumn("batch_id", F.lit(batch_id))
-             .write.mode("append").parquet(triples_path))
+            triples_stage(batch_df).write.mode("overwrite").parquet(
+                os.path.join(triples_path, "batch_id=%d" % batch_id))
         finally:
             batch_df.unpersist()
 
